@@ -634,9 +634,13 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     (nsObj, f)
   }
 
-  private def valueTypeOf(f: Feature): DataType =
-    if (f.serialized) StringType
-    else f.valueType.map(DataType.fromJson).getOrElse(DoubleType)
+  private def valueTypeOf(f: Feature): DataType = pinnedTypeOf(f).getOrElse(DoubleType)
+
+  /** The value type the facade guarantees for stored data: the type
+    * pinned at the first real save, or the string envelope of a
+    * serialized feature. None for a feature written around the facade. */
+  private def pinnedTypeOf(f: Feature): Option[DataType] =
+    if (f.serialized) Some(StringType) else f.valueType.map(DataType.fromJson)
 
   /** One feature's deduped (time, value) series; recursive for transforms
     * with cycle detection (_model.py:186-228). `clipFrom` is deferred when
@@ -695,20 +699,32 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   /** Shared read-side pipeline: time travel -> last-writer-wins dedup ->
     * serialized-envelope unwrap (reference deserializes on load,
-    * dask.py:123-131). Used by loadSeries and the first/last endpoint
-    * lookups so the two paths can never drift.
+    * dask.py:123-131). The first/last endpoint lookups share its time
+    * travel and unwrap through [[endpointOf]], so the paths cannot drift.
     */
   private def postProcess(
       raw: DataFrame,
       f: Feature,
-      timeTravel: Option[String]): DataFrame = {
-    val traveled = timeTravel.map(d => TimeseriesOps.timeTravel(raw, d)).getOrElse(raw)
-    val deduped = TimeseriesOps.dedupLatest(traveled)
-    val unwrapped =
-      if (f.serialized) deduped.withColumn("value", get_json_object(col("value"), "$.v"))
-      else deduped
-    unwrapped.select("time", "value")
-  }
+      timeTravel: Option[String]): DataFrame =
+    unwrap(TimeseriesOps.dedupLatest(travel(raw, timeTravel)), f)
+
+  /** The endpoint form of [[postProcess]]: time travel, then the
+    * dedup-equivalent top-1 ([[TimeseriesOps.endpointRow]]), then the
+    * unwrap — one Spark job, no exchange. */
+  private def endpointOf(
+      raw: DataFrame,
+      f: Feature,
+      timeTravel: Option[String],
+      fromTail: Boolean): Option[org.apache.spark.sql.Row] =
+    unwrap(TimeseriesOps.endpointRow(travel(raw, timeTravel), fromTail), f)
+      .collect().headOption
+
+  private def travel(raw: DataFrame, timeTravel: Option[String]): DataFrame =
+    timeTravel.map(d => TimeseriesOps.timeTravel(raw, d)).getOrElse(raw)
+
+  private def unwrap(df: DataFrame, f: Feature): DataFrame =
+    (if (f.serialized) df.withColumn("value", get_json_object(col("value"), "$.v")) else df)
+      .select("time", "value")
 
   /** Flagship read (core.py:246-276): wide frame, one column per feature
     * named `namespace/name`, outer-joined on time and forward-filled;
@@ -946,8 +962,11 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     * (under timeTravel) 9, then all, stopping as soon as the skew
     * contract proves the candidate safe (see [[endpointLookup]]) — so a
     * point lookup on a years-deep feature touches a few days'
-    * directories instead of scanning history. Transformed features fall
-    * back to the full DAG load.
+    * directories instead of scanning history. The store opens only those
+    * directories, at the feature's pinned schema, and each width costs
+    * one top-1 Spark job that folds the last-writer-wins dedup into the
+    * endpoint pick (no shuffle). Transformed features fall back to the
+    * full DAG load.
     */
   def last(features: Seq[String], timeTravel: Option[String] = None): Map[String, Option[Any]] =
     endpoint(features, timeTravel, fromTail = true)
@@ -1063,10 +1082,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     val read = scala.collection.mutable.ArrayBuffer[Int]()
     val row = widths.iterator.map { w =>
       read += w
-      val raw = st.readPartitions(f.name, parts.take(w), valueTypeOf(f))
-      val df = postProcess(raw, f, timeTravel)
-      (w, (if (fromTail) TimeseriesOps.lastRow(df) else TimeseriesOps.firstRow(df))
-        .collect().headOption)
+      val raw = st.readPartitions(f.name, parts.take(w), pinnedTypeOf(f))
+      (w, endpointOf(raw, f, timeTravel, fromTail))
     }.collectFirst {
       case (w, Some(r)) if timeTravel.isEmpty || w == parts.length ||
         endpointSettled(r.getTimestamp(0), parts(w), f.partition, fromTail) => Some(r)
@@ -1105,10 +1122,9 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     if (parts.isEmpty) return None
     val widths = Seq(3, 9, parts.length).filter(w => w > 0 && w <= parts.length).distinct
     widths.iterator.map { w =>
-      val raw = st.readPartitions(f.name, parts.take(w), valueTypeOf(f))
+      val raw = st.readPartitions(f.name, parts.take(w), pinnedTypeOf(f))
         .filter(col("time") < lit(from))
-      val df = postProcess(raw, f, timeTravel)
-      (w, TimeseriesOps.lastRow(df).collect().headOption)
+      (w, endpointOf(raw, f, timeTravel, fromTail = true))
     }.collectFirst {
       case (w, Some(r)) if w == parts.length ||
         endpointSettled(r.getTimestamp(0), parts(w), f.partition, fromTail = true) =>

@@ -968,6 +968,25 @@ object TimeseriesOps {
   def firstRow(df: DataFrame, timeCol: String = TimeCol): DataFrame =
     df.orderBy(col(timeCol).asc).limit(1)
 
+  /** The row [[dedupLatest]] then [[lastRow]] (`fromTail`) or
+    * [[firstRow]] keeps, as ONE top-1 with no exchange. Only the
+    * endpoint time's group matters, so the order is that time first
+    * (the same `desc`/`asc` as lastRow/firstRow), then dedupLatest's
+    * last-writer-wins key — `createdCol`, then every other orderable
+    * column — each descending with nulls last: the struct order its
+    * `max` applies (null below any value, NaN above every number).
+    */
+  def endpointRow(
+      df: DataFrame,
+      fromTail: Boolean,
+      timeCol: String = TimeCol,
+      createdCol: String = CreatedCol): DataFrame = {
+    val tie = df.columns.toSeq.filterNot(Set(timeCol, createdCol))
+      .filter(c => isOrderable(df.schema(c).dataType))
+    val byTime = if (fromTail) col(timeCol).desc else col(timeCol).asc
+    df.orderBy(byTime +: (createdCol +: tie).map(col(_).desc): _*).limit(1)
+  }
+
   /** Largest-triangle downsampling for visualization (LTTB, Steinarsson
     * 2013) in its BUCKET-ANCHOR, fully parallel variant. The classic
     * algorithm chains each bucket's selection to the PREVIOUS bucket's

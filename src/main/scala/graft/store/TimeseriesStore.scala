@@ -126,8 +126,8 @@ class TimeseriesStore(
     * `_temporary`, an external mkdir) — schema inference then throws
     * where the documented behavior is the empty envelope.
     */
-  private def parquetOrEmpty(name: String, valueType: DataType): DataFrame =
-    try spark.read.options(storageOptions).parquet(featurePath(name))
+  private def parquetOrEmpty(valueType: DataType, paths: String*): DataFrame =
+    try spark.read.options(storageOptions).parquet(paths: _*)
     catch {
       case e: org.apache.spark.sql.AnalysisException
         if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
@@ -669,7 +669,7 @@ class TimeseriesStore(
     if (!exists(name)) return emptyFrame(valueType)
     if (logBacked) return txRead(name, from, to, valueType, partitionStyle, asOfVersion)
     require(asOfVersion.isEmpty, "asOfVersion requires the txlog backend")
-    val df = parquetOrEmpty(name, valueType)
+    val df = parquetOrEmpty(valueType, featurePath(name))
     if (!df.columns.contains("partition")) return df // empty-contract frame
     // Partition bounds are widened by one unit each side and anchored on
     // UTC — NOT the reader's session zone. Partition strings were derived
@@ -772,23 +772,35 @@ class TimeseriesStore(
     * primitive behind `last()` (the reference's "restrict scan to the
     * final partition(s)" intent, _model.py:251-254): a point lookup on a
     * 100 TB feature touches one day's directory, not the history.
+    * The plain backend opens only the requested `partition=<p>`
+    * directories, at the pinned `valueType` — no listing of the rest of
+    * the tree, no schema-inference job. Unpinned (None: written straight
+    * through [[save]]), the schema is inferred from those directories
+    * alone, never guessed. Directories without data files read as the
+    * empty envelope.
     */
-  def readPartitions(name: String, parts: Seq[String], valueType: DataType): DataFrame = {
-    if (!exists(name) || parts.isEmpty) return emptyFrame(valueType)
+  def readPartitions(name: String, parts: Seq[String], valueType: Option[DataType]): DataFrame = {
+    val emptyType = valueType.getOrElse(DoubleType)
+    if (!exists(name) || parts.isEmpty) return emptyFrame(emptyType)
     if (logBacked) {
       val wanted = parts.toSet
       val log = txLog(name)
       val adds = log.snapshot().filter(a => wanted(a.partition))
-      if (adds.isEmpty) return emptyFrame(valueType)
+      if (adds.isEmpty) return emptyFrame(emptyType)
       val schemas = log.schemaHistory()
       return openAdds(name, adds, schemas, partitionStyle = "date")
         .select(dataCols(schemas).map(col).toIndexedSeq: _*)
     }
-    val df = parquetOrEmpty(name, valueType)
-    if (!df.columns.contains("partition")) return df // empty-contract frame
-    df.filter(col("partition").cast(StringType).isin(parts: _*))
-      .select(TimeCol, CreatedCol, ValueCol)
+    val dirs = parts.map(p => s"${featurePath(name)}/partition=$p")
+    valueType match {
+      case Some(t) => spark.read.options(storageOptions).schema(emptySchema(t)).parquet(dirs: _*)
+      case None    => parquetOrEmpty(emptyType, dirs: _*).select(TimeCol, CreatedCol, ValueCol)
+    }
   }
+
+  /** [[readPartitions]] at a known value type. */
+  def readPartitions(name: String, parts: Seq[String], valueType: DataType): DataFrame =
+    readPartitions(name, parts, Some(valueType))
 
   /** S4: feature directories present in storage. */
   def ls(): Seq[String] = {
@@ -1469,7 +1481,7 @@ class TimeseriesStore(
           val adds = log.snapshot()
           if (adds.isEmpty) return
           openAdds(name, adds, log.schemaHistory(), partitionStyle = "date")
-        } else parquetOrEmpty(name, DoubleType)
+        } else parquetOrEmpty(DoubleType, featurePath(name))
       if (!df.columns.contains("partition")) return // file-less dir: nothing to copy
       // carry every data column (an evolved source clones its full
       // latest schema; the destination declares it on first write)

@@ -5,6 +5,8 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import scala.util.control.NonFatal
+
 /** One file added to the table: `path` is RELATIVE to the table root
   * (`partition=<p>/<file>.parquet`), `partition` is the hive partition
   * value it belongs to (file-level pruning reads the log, not the
@@ -575,15 +577,15 @@ class TxLog(
       // touches every live add, so stat the missing sizes here ONCE —
       // after one checkpoint cycle a reopened old-format table reads
       // through MetaFileIndex like a freshly written one. Best-effort
-      // per file: an unstattable path just keeps fsize absent (the safe
-      // listing fallback). Cost is one getFileStatus per fsize-less add
-      // on the FIRST checkpoint only — later checkpoints replay the
-      // backfilled adds.
+      // per file: an unstattable or malformed path just keeps fsize
+      // absent (the safe listing fallback). Cost is one getFileStatus
+      // per fsize-less add on the FIRST checkpoint only — later
+      // checkpoints replay the backfilled adds.
       val adds = adds0.map { a =>
         if (a.fsize.isDefined) a
         else try a.copy(fsize =
           Some(fs.getFileStatus(new Path(tableDir, a.path)).getLen))
-        catch { case _: java.io.IOException => a }
+        catch { case NonFatal(_) => a }
       }
       val lines = (TxAction(commitTs = Some(commitTs)) +:
         (schemas.map(sj => TxAction(schemaJson = Some(sj))) ++

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Range, SubqueryAlias, Union}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
@@ -20,20 +21,24 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * greedy-packing lower bound with Spark's exact split-size formula.
   * The guards this feeds have generous margins (&lt; cores, &gt; 4x
   * cores), so the bound's ≤2x error only moves borderline cases, where
-  * either choice is benign.
+  * either choice is benign. A partitioned file scan counts only the
+  * partitions that the partition predicates of the Filters above it
+  * keep, as physical planning would prune them.
   */
-object PartitionEstimate {
+object PartitionEstimate extends PredicateHelper {
 
   def leafScanPartitions(df: DataFrame): Option[Long] = {
     val spark = df.queryExecution.sparkSession
-    def est(p: LogicalPlan): Option[Long] = p match {
+    // `conds`: conjuncts of the Filters above `p`. A Union's output
+    // attributes are its first child's, so they stop there.
+    def est(p: LogicalPlan, conds: Seq[Expression]): Option[Long] = p match {
       case u: Union =>
         u.children.foldLeft(Option(0L)) { (acc, c) =>
-          for (a <- acc; e <- est(c)) yield a + e
+          for (a <- acc; e <- est(c, Nil)) yield a + e
         }
-      case pr: Project       => est(pr.child)
-      case f: Filter         => est(f.child)
-      case s: SubqueryAlias  => est(s.child)
+      case pr: Project       => est(pr.child, conds)
+      case f: Filter         => est(f.child, conds ++ splitConjunctivePredicates(f.condition))
+      case s: SubqueryAlias  => est(s.child, conds)
       case r: Range =>
         Some(r.numSlices.getOrElse(spark.sparkContext.defaultParallelism).toLong)
       case l: LogicalRDD => Some(l.rdd.getNumPartitions.toLong)
@@ -46,7 +51,12 @@ object PartitionEstimate {
           case fsr: HadoopFsRelation =>
             // the listing is the same (cached) one physical planning uses
             val openCost = spark.sessionState.conf.filesOpenCostInBytes
-            val sizes = fsr.location.listFiles(Nil, Nil).flatMap(_.files.map(_.getLen))
+            val resolver = spark.sessionState.conf.resolver
+            val partAttrs = AttributeSet(lr.output.filter(a =>
+              fsr.partitionSchema.exists(f => resolver(f.name, a.name))))
+            val partFilters = conds.filter(c => c.deterministic && c.references.nonEmpty &&
+              c.references.subsetOf(partAttrs) && !SubqueryExpression.hasSubquery(c))
+            val sizes = fsr.location.listFiles(partFilters, Nil).flatMap(_.files.map(_.getLen))
             val total = sizes.map(_ + openCost).sum
             val maxSplit = FilePartition.maxSplitBytes(spark, total)
             Some(math.max(1L, (total + maxSplit - 1) / maxSplit))
@@ -54,6 +64,6 @@ object PartitionEstimate {
         }
       case _ => None
     }
-    est(df.queryExecution.analyzed)
+    est(df.queryExecution.analyzed, Nil)
   }
 }

@@ -45,4 +45,11 @@ class AnnIvfStoredSpec extends SparkSpec {
       .select("q_id", "c_id", "cosine", "rank").collect().map(_.toSeq).toSet
     assert(mem == st && st.nonEmpty)
   }
+
+  test("probeCells rejects an index without centers before any job runs") {
+    val empty = AnnIvf.Index(Nil, spark.emptyDataFrame, "embedding")
+    val (_, jobs) = withJobCount(intercept[IllegalArgumentException](
+      corpus.select(AnnIvf.probeCells(empty, col("embedding"), nProbe = 2))))
+    assert(jobs == 0)
+  }
 }

@@ -112,4 +112,14 @@ class AnnPqSpec extends SparkSpec {
       assert(lutE === lutK, s"lutOf/lutExpr disagree at k=$k")
     }
   }
+
+  test("encodeExpr rejects codebooks without subspaces or centroids before any job runs") {
+    val df = Seq(Seq(1.0, 2.0)).toDF("v")
+    val (_, jobs) = withJobCount {
+      for (books <- Seq(Seq.empty[Seq[Array[Double]]], Seq(Seq.empty[Array[Double]])))
+        intercept[IllegalArgumentException](
+          df.select(AnnPq.encodeExpr(AnnPq.Codebooks(2, books), col("v"))))
+    }
+    assert(jobs == 0)
+  }
 }

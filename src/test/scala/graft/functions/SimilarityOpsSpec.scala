@@ -207,4 +207,13 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(SimilarityOps.sizedPlanesPerBand(1L << 40) == 20) // cap clamp
     intercept[IllegalArgumentException](SimilarityOps.sizedPlanesPerBand(0))
   }
+
+  test("signBucket and signBucketLong reject an empty plane set before any job runs") {
+    val df = Seq(Seq(1.0, 2.0)).toDF("v")
+    val (_, jobs) = withJobCount {
+      intercept[IllegalArgumentException](df.select(SimilarityOps.signBucket(col("v"), Nil)))
+      intercept[IllegalArgumentException](df.select(SimilarityOps.signBucketLong(col("v"), Nil)))
+    }
+    assert(jobs == 0)
+  }
 }

@@ -164,4 +164,24 @@ class MetaFileIndexSpec extends SparkSpec {
     assert(scan.relation.location.getClass.getSimpleName == "MetaFileIndex")
     assert(df.count() == 200)
   }
+
+  test("checkpoint skips the fsize backfill of an add with a malformed path") {
+    val (st, dir) = mkStore()
+    st.save("f", sampleDf)
+    val log = new TxLog(spark.sparkContext.hadoopConfiguration, s"$dir/feature/f")
+    // "a:b" parses as a scheme with a relative path: building the Path
+    // throws IllegalArgumentException, not an IOException
+    val bad = TxAdd(path = "a:b", partition = "2099-01-01")
+    log.commit(Seq(bad))
+    var v = 0L
+    while ({
+      v = log.commit(Seq.empty, check = Some(("__ckpt_probe", "true")))
+      v % TxLog.CheckpointEvery != 0
+    }) ()
+    val ckpt = java.nio.file.Paths.get(dir, "feature", "f", "_txlog", f"$v%020d.checkpoint.json")
+    assert(java.nio.file.Files.exists(ckpt), "the checkpoint was not written")
+    val adds = new TxLog(spark.sparkContext.hadoopConfiguration, s"$dir/feature/f").snapshot()
+    assert(adds.filter(_.path == "a:b").map(_.fsize) == Seq(None))
+    assert(adds.filterNot(_.path == "a:b").forall(_.fsize.isDefined))
+  }
 }
